@@ -3,20 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // static conf, default 100: the full query suite generates several
-      // hundred codegen classes, so the default LRU recompiles hot
-      // stages mid-suite — later queries pay Janino time that isolated
-      // runs of the same query don't
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus)
     // Warm-up: pay JVM/codegen/scan-setup cost outside the timed region
     // so the first query's number isn't session startup. Uses only the
     // configured sfDir (no hardcoded dataset path).
@@ -62,14 +50,7 @@ object Bench {
     // Fixed name order: HashMap iteration reshuffles whenever the query
     // set changes, silently moving queries relative to session warmup —
     // sorted order keeps per-query numbers comparable across rounds.
-    // SPARK_GRAFT_ONLY=q52_dup_clusters[,q65_...] narrows the run for
-    // local iteration; the driver never sets it, so round benches are
-    // always the full suite.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map {
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) =>
         val (a, b) = (once(name, fn), once(name, fn))
         name -> (if (a < 0 || b < 0) -1.0 else math.min(a, b))
@@ -87,7 +68,9 @@ object Bench {
       .mkString("{", ",", "}")
     val errs = failed.map("\"" + short(_) + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
+    // cpus rides every artifact: an 8-core and a 32-core run must never
+    // be compared as if they were the same configuration
+    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","cpus":$cpus}"""
     println(line)
     // The driver captures only the tail of the sbt log, so with ~200
     // queries the per-query map can be truncated in BENCH_r{N}.json.
@@ -97,7 +80,7 @@ object Bench {
       val full = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
       val payload =
-        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$full,"errors":$errs,"sf":"$sfDir"}"""
+        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$full,"errors":$errs,"sf":"$sfDir","cpus":$cpus}"""
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_last.json"),
         payload.getBytes("UTF-8"))

@@ -102,6 +102,19 @@ object Graph {
   private case class PlannedAdj(adj: DataFrame, rows: Long,
                                 scratch: Option[String], buckets: Long)
 
+  /** The first usable entry of a `spark.local.dir` value. Spark reads
+    * that key as a comma-separated list and skips the entries it cannot
+    * create; joining the raw list into a path would write under a bogus
+    * `/a,/b/...` directory instead. No usable entry fails here, naming
+    * the list. */
+  private[graft] def firstUsableDir(dirs: String): String =
+    dirs.split(",").iterator.map(_.trim).filter(_.nonEmpty)
+      .map(new java.io.File(_))
+      .find(f => (f.isDirectory || f.mkdirs()) && f.canWrite)
+      .map(_.getPath)
+      .getOrElse(throw new java.io.IOException(
+        s"no usable directory in spark.local.dir [$dirs]"))
+
   /** Plan the traversal adjacency: the in-memory hash-partitioned
     * checkpoint (default), or the opt-in disk-bucketed parquet layout
     * (see [[AdjScratchKey]]). The disk path writes STRAIGHT from the
@@ -153,8 +166,8 @@ object Graph {
     val scratch = scratchConf.orElse {
       if (estRows < AdjDiskMinRows) None
       else if (spark.sparkContext.isLocal)
-        Some(spark.conf.getOption("spark.local.dir")
-          .getOrElse(System.getProperty("java.io.tmpdir", "/tmp")))
+        Some(firstUsableDir(spark.conf.getOption("spark.local.dir")
+          .getOrElse(System.getProperty("java.io.tmpdir", "/tmp"))))
       else {
         System.err.println(
           s"graft: adjacency estimated at ~$estRows rows exceeds the " +
@@ -188,9 +201,9 @@ object Graph {
     } else {
       // The checkpoint's whole purpose is that the graph NEVER MOVES
       // AGAIN — but two things silently broke that and every round was
-      // re-shuffling the full adjacency (round-15 QProf: four 19.8 MB
-      // adjacency re-exchanges per q166 run, one per round; CkptProbe
-      // reproduces it in isolation):
+      // re-shuffling the full adjacency (round 15: four 19.8 MB
+      // adjacency re-exchanges per q166 run, one per round; PlanShapeSpec
+      // pins the checkpoint invariant in isolation):
       //  1. repartition(col) without a number is REPARTITION_BY_COL,
       //     whose partition count AQE may coalesce — pin it to
       //     spark.sql.shuffle.partitions so it matches what every
@@ -483,19 +496,12 @@ object Graph {
   def kTruss(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
              maxIters: Int = 50): DataFrame = {
     require(k >= 3 && maxIters >= 1)
-    val __dbg = sys.env.contains("GRAFT_KTRUSS_DEBUG")
-    var __t0 = System.nanoTime()
-    def __lap(tag: String): Unit = if (__dbg) {
-      println(f"[ktruss-dbg] $tag: ${(System.nanoTime() - __t0) / 1e9}%.2f s")
-      __t0 = System.nanoTime()
-    }
     val norm = edges.select(
         least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
     val e = norm.localCheckpoint()
-    __lap("edges")
     // ONE triangle enumeration (the adaptive [[triangles]] plan),
     // then the peel works off the checkpointed set — re-enumerating
     // per round was measured 56 s at sf0.1 (the survivor set stays
@@ -505,7 +511,6 @@ object Graph {
     // materializes anyway — checkpointed and partitioned, nothing
     // driver-side.
     val tri = triangles(e).localCheckpoint()
-    __lap("enumerate")
     org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(e)
     // The peel is a DRIVER-COORDINATED CASCADE. Profiling killed two
     // earlier shapes: the classic loop (full 3·|tri| support
@@ -550,7 +555,6 @@ object Graph {
       .groupBy(col("__e.a").as("a"), col("__e.b").as("b"))
       .agg(count(lit(1)).as("support"))
     val sup0 = supportAgg(tri).localCheckpoint()
-    __lap("round0-agg")
     val spark = tri.sparkSession
     val aF = sup0.schema("a"); val bF = sup0.schema("b")
     def pairSchema(extra: org.apache.spark.sql.types.StructField*) =
@@ -616,7 +620,6 @@ object Graph {
     // the demand-paged path is exactly as before.
     val supAll0 = sup0.limit(1000001).collect()
     val fullSup = supAll0.length <= 1000000
-    if (__dbg) println(s"[ktruss-dbg] fullSup=$fullSup (${supAll0.length})")
     val weak0 = if (fullSup) supAll0.filter(_.getLong(2) < k - 2)
       else sup0.filter(col("support") < k - 2)
         .limit(1000001).collect()
@@ -648,7 +651,6 @@ object Graph {
           col("support") < k - 2 + 4)
         .groupBy(col("support")).agg(count(lit(1)).as("n"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      if (__dbg) println(s"[ktruss-dbg] hist=${hist.toSeq.sortBy(_._1)}")
       val budget = math.max(50000L, 3L * weak0.length)
       var delta = 0
       var cum = 0L
@@ -664,7 +666,6 @@ object Graph {
           col("support") < k - 2 + delta)
         .limit(1000001).collect()
     }
-    __lap(s"weak0-collect (weak=${weak0.length} fragile=${fragile0.length})")
     val sup: DataFrame = if (weak0.length > 1000000) {
       // all-shuffle fallback: seed round 0 with the sup0 aggregate
       // already materialized above (peelShuffle frees it after its
@@ -779,7 +780,6 @@ object Graph {
               col("b").as("y"))), Seq("x", "y"))
             .select(col("a"), col("b"), col("c"))
             .limit(4000001).collect()
-          __lap(s"probe $probes (edges=${probeRows.length} cand=${cand.length})")
           if (cand.length > 4000000 || knownTri.size > 4000000) {
             // touched-triangle volume outgrew the driver budget:
             // rebuild the live triangle set (minus everything removed
@@ -821,7 +821,6 @@ object Graph {
                 .foreach { r =>
                   baseSup((r.get(0), r.get(1))) = r.getLong(2)
                 }
-              __lap(s"fetch $probes (unknown=${unknown.length})")
             }
             // probed edges now have complete triangle lists: retire
             for (e <- probeSet) {
@@ -837,7 +836,6 @@ object Graph {
           }
         }
       }
-      __lap("cascade-done")
       if (escaped != null) escaped
       else if (work.nonEmpty) throw new IllegalStateException(
         s"kTruss(k=$k) did not reach a fixed point in $maxIters " +

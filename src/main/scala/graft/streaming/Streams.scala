@@ -27,7 +27,8 @@ object Streams {
     * reproduces the reference's per-block cadence (its mailbox hands the
     * parser one block at a time) and pays a fixed per-trigger cost
     * (source listing, incremental planning, per-batch dim broadcast —
-    * measured ~0.6 s/block on this box, see StreamBench); larger values
+    * ~0.6 s/block; perfbench's flagship-realtime traced run breaks it
+    * down per layer); larger values
     * amortize that cost across blocks, and ≤ 0 removes the cap entirely
     * (each trigger takes everything available — the backfill shape).
     */

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Plan-dump tool for the optimization rounds (test scope, like Scratch —
-  * not part of the library surface). Writes `.explain("formatted")` of each
+/** Plan-dump tool (test scope — not part of the library surface); the
+  * `plans/` dumps are made with it. Writes `.explain("formatted")` of each
   * named declared query to `<outDir>/<query>_<tag>.txt`.
   *
   * Usage:
@@ -16,13 +14,8 @@ object ExplainQ {
     require(args.length == 3, "usage: ExplainQ <outDir> <tag> <q1,q2|all>")
     val Array(outDir, tag, qlist) = args
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.register(spark)
+    val spark =
+      GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val names: Seq[String] =
       if (qlist == "all") SparkEntry.queries.keys.toSeq.sorted
       else qlist.split(",").map(_.trim).toSeq

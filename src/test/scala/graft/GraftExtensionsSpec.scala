@@ -1,17 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+class GraftExtensionsSpec extends SparkSpec {
 
-class GraftExtensionsSpec extends AnyFunSuite {
-
-  // live-session registration (the shared test session already exists, so
-  // the build-time extensions path wouldn't apply — same builders either
-  // way, see GraftFunctions)
-  private lazy val spark: SparkSession = {
-    val s = SparkSpec.session
-    GraftFunctions.register(s)
-    s
+  test("the shared session carries GraftSession.local's settings") {
+    // live-session registration: the factory registers the graft
+    // functions after getOrCreate (the build-time extensions path would
+    // not apply to an existing session — same builders either way)
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "5000")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
+    assert(spark.sql("SELECT isqrt(16L)").collect()(0).getLong(0) === 4L)
   }
 
   test("custom expressions are callable from SQL") {

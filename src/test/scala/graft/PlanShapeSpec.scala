@@ -636,7 +636,7 @@ class PlanShapeSpec extends SparkSpec {
   // (q149's BFS rounds execute eagerly via localCheckpoint during
   // query construction, so its final plan is just the post-BFS
   // aggregate — the per-round join shape is exercised by GraphSpec
-  // and the Scratch replication probe instead.)
+  // and the checkpoint-partitioning test below instead.)
   test("q148 Adamic-Adar: equi-joins only, never nested-loop") {
     val bad = collectAll(plan("q148_adamic_adar")) {
       case j: org.apache.spark.sql.execution.joins.CartesianProductExec =>
@@ -1334,5 +1334,44 @@ class PlanShapeSpec extends SparkSpec {
       s"rank filters no longer push as WindowGroupLimit partials:\n$s")
     assert(org.apache.spark.sql.graft.Bridge.cacheIsEmpty(spark),
       "marginMine must not leave cached tables")
+  }
+
+  test("checkpoint partitioning: repartition(n, k).localCheckpoint() " +
+      "built with AQE off keeps hash(k, n), so a shuffle_hash join " +
+      "exchanges only the small side") {
+    // the invariant Graph.planAdjacency's in-memory regime rests on:
+    // every traversal round joins the checkpointed adjacency against a
+    // small frontier, and only the frontier may move. A new session, so
+    // the shared test session's AQE setting is never touched.
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.functions._
+    val s = spark.newSession()
+    val n = s.conf.get("spark.sql.shuffle.partitions").toInt
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    val ck = s.range(100000)
+      .select((col("id") % 5000).as("k"), col("id").as("v"))
+      .repartition(n, col("k")).localCheckpoint()
+    s.conf.set("spark.sql.adaptive.enabled", "true")
+    val recorded = ck.queryExecution.analyzed.collectFirst {
+      case r: LogicalRDD => r.outputPartitioning
+    }
+    recorded match {
+      case Some(h: HashPartitioning) =>
+        assert(h.numPartitions === n)
+        assert(h.expressions.collect { case a: Attribute => a.name } ===
+          Seq("k"))
+      case other => fail(s"checkpoint recorded no hash partitioning: $other")
+    }
+    val small = s.range(1000).select(col("id").as("k"),
+      (col("id") * 2).as("w"))
+    val j = ck.join(small.hint("shuffle_hash"), Seq("k"))
+    val exchanges = collectAll(j.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e
+    }
+    assert(exchanges.length === 1, exchanges.mkString("\n"))
+    val cols = exchanges.head.child.output.map(_.name)
+    assert(cols.contains("w") && !cols.contains("v"), cols)
   }
 }

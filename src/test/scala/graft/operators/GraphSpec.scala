@@ -285,6 +285,24 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("a comma-separated spark.local.dir resolves to its first usable " +
+      "entry, and to a loud failure naming the list when none is") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-local-dir")
+    val file = java.nio.file.Files.createFile(tmp.resolve("plain-file"))
+    val (a, b) = (tmp.resolve("a").toString, tmp.resolve("b").toString)
+    try {
+      // the first entry is created when missing, as Spark's own
+      // local-dir resolution does
+      assert(Graph.firstUsableDir(s"$a,$b") === a)
+      assert(new java.io.File(a).isDirectory)
+      // an entry that cannot become a directory is skipped
+      assert(Graph.firstUsableDir(s"$file/x, $b") === b)
+      val bad = s"$file/x,$file/y"
+      val e = intercept[java.io.IOException](Graph.firstUsableDir(bad))
+      assert(e.getMessage.contains(s"[$bad]"), e.getMessage)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+  }
+
   test("ssspHops: relaxation beats the direct edge; hop cap binds") {
     // a-b direct costs 10, but a-c-b costs 2 — the cheap route needs
     // 2 hops, so maxHops=1 must report 10 and maxHops>=2 report 2.

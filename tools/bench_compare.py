@@ -28,10 +28,13 @@ Usage:  python3 tools/bench_compare.py PREV_BENCH.json [CUR_BENCH.json]
                       `round N:` commit — round_close.sh digs it out)
 
 All files are graft.Bench output lines: {"metric":"total","value":S,
-"queries":{name:sec,...},...}. Prints one fenced block; exit 0 always
-(regressions are REPORTED, not gated — box variance up to +/-50%
-between sessions is documented in ENGINE.md, so a sum ratio is context,
-not a failure).
+"queries":{name:sec,...},"cpus":N,...}. Prints one fenced block and
+exits 0 (regressions are REPORTED, not gated — box variance up to
++/-50% between sessions is documented in ENGINE.md, so a sum ratio is
+context, not a failure). Artifacts that record different core counts
+are not comparable: the tool then exits 1 without comparing. An
+artifact that records no core count (older Bench output) is compared
+with a warning naming it.
 """
 import json
 import sys
@@ -122,15 +125,27 @@ def main() -> int:
         return 2
     prev_path = args[0]
     cur_path = args[1] if len(args) > 1 else "bench_last.json"
-    with open(prev_path) as f:
-        prev = json.load(f)
-    with open(cur_path) as f:
-        cur = json.load(f)
+    paths = [prev_path, cur_path] + ([samebox_path] if samebox_path else [])
+    loaded = {}
+    for path in paths:
+        with open(path) as f:
+            loaded[path] = json.load(f)
+    prev, cur = loaded[prev_path], loaded[cur_path]
+    for path, artifact in loaded.items():
+        if "cpus" not in artifact:
+            print(f"warning: {path} records no core count; it may not "
+                  f"match the other artifacts' cpus", file=sys.stderr)
+    cpus = {path: a["cpus"] for path, a in loaded.items() if "cpus" in a}
+    if len(set(cpus.values())) > 1:
+        print("error: artifacts record different core counts, refusing "
+              "to compare: " + ", ".join(f"{p} cpus={c}"
+                                         for p, c in cpus.items()),
+              file=sys.stderr)
+        return 1
 
     print("```")
     if samebox_path:
-        with open(samebox_path) as f:
-            samebox = json.load(f)
+        samebox = loaded[samebox_path]
         compare(samebox, cur, "SAME-BOX close-over-close (headline)",
                 cur_path, samebox_path)
         print()
