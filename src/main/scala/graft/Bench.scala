@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.catalog.QuerySpec
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -19,16 +19,14 @@ object Bench {
     // A failed query records -1.0 (never its elapsed time): a query that
     // throws immediately must read as a FAILURE in the JSON, not a
     // near-zero "speedup". Failed names are also listed under "errors".
-    def once(name: String,
-             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
+    def once(q: QuerySpec): Double = {
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       } catch {
         case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          System.err.println(s"[bench] ${q.name} FAILED: ${e.getMessage}")
           -1.0
       } finally {
         // Queries persist multi-consumer intermediates through
@@ -47,20 +45,19 @@ object Bench {
         System.gc()
       }
     }
-    // Fixed name order: HashMap iteration reshuffles whenever the query
-    // set changes, silently moving queries relative to session warmup —
-    // sorted order keeps per-query numbers comparable across rounds.
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map {
-      case (name, fn) =>
-        val (a, b) = (once(name, fn), once(name, fn))
-        name -> (if (a < 0 || b < 0) -1.0 else math.min(a, b))
+    // Fixed name order, not catalog (family) order: moving a query between
+    // family files must not move it relative to session warmup — sorted
+    // order keeps per-query numbers comparable across rounds.
+    val results = SparkEntry.catalog.sortBy(_.name).map { q =>
+      val (a, b) = (once(q), once(q))
+      q.name -> (if (a < 0 || b < 0) -1.0 else math.min(a, b))
     }
     val failed = results.collect { case (k, v) if v < 0 => k }.toSeq.sorted
     // The driver captures only the tail of the sbt log; with 75 queries a
     // full-name, full-precision line (~3.5 KB) overflows that window and
     // the summary JSON arrives truncated (unparseable). Keys are therefore
-    // the qNN prefix (unique by construction — every query name starts
-    // qNN_) and seconds are rounded to ms, keeping the line ~1 KB.
+    // the qNN prefix (unique: CatalogSpec checks every name starts with
+    // its own qNN_) and seconds are rounded to ms, keeping the line ~1 KB.
     def fmt(v: Double): String = BigDecimal(v)
       .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def short(name: String): String = name.takeWhile(_ != '_')

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Loaders for the driver-provided star schema (TESTDATA.md).
   *
-  * All `SparkEntry.queries` read through here so the scan path is uniform:
-  * parquet scans get column pruning + predicate pushdown from Catalyst for
-  * free. At cluster scale the same call works on a directory of many files;
+  * All catalog queries (`graft/catalog/`) read through here so the scan
+  * path is uniform: parquet scans get column pruning + predicate pushdown
+  * from Catalyst for free. At cluster scale the same call works on a directory of many files;
   * nothing here assumes single-file inputs.
   */
 object Tables {

@@ -1,0 +1,11 @@
+package graft
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.col
+
+package object catalog {
+  // sugar so the query bodies read like notebook Spark
+  private[catalog] implicit class Sym(val sc: StringContext) {
+    def $(args: Any*): Column = col(sc.s(args: _*))
+  }
+}

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression,
+  ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Exact integer square root — floor(√x) computed so the result is
@@ -32,8 +33,11 @@ object IntMath {
   }
 }
 
-/** `isqrt(x)` — exact floor square root of a non-negative BIGINT. */
-case class IntSqrt(child: Expression) extends UnaryExpression {
+/** `isqrt(x)` — exact floor square root of a non-negative BIGINT; narrower
+  * integer arguments are cast up to BIGINT by the analyzer. */
+case class IntSqrt(child: Expression) extends UnaryExpression
+    with ImplicitCastInputTypes {
+  override def inputTypes = Seq(LongType)
   override def dataType: DataType = LongType
   override def prettyName: String = "isqrt"
 

@@ -174,7 +174,7 @@ object Percentiles {
   // every level to one bucket), but they are COUNTED, and a rank target
   // landing inside the -Inf prefix or +Inf suffix of the ordered group
   // answers directly.
-  private def cleanRows(df: DataFrame, grpCol: String, valCol: String)
+  private[graft] def cleanRows(df: DataFrame, grpCol: String, valCol: String)
       : DataFrame =
     df.select(col(grpCol).as("__g"), col(valCol).cast("double").as("__v"))
       .filter(col("__v").isNotNull && !isnan(col("__v")))
@@ -186,7 +186,7 @@ object Percentiles {
     * and the infinite bands — `__nneg` values of -Inf below every finite
     * value, `__npos` of +Inf above. `__lo`/`__hi` are null for a group
     * with no finite values (every target then answers from a band). */
-  private def groupStats(rows: DataFrame): DataFrame =
+  private[graft] def groupStats(rows: DataFrame): DataFrame =
     rows.groupBy(col("__g")).agg(
       min(when(finite(col("__v")), col("__v"))).as("__lo"),
       max(when(finite(col("__v")), col("__v"))).as("__hi"),

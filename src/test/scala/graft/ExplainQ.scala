@@ -16,15 +16,15 @@ object ExplainQ {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark =
       GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    val names: Seq[String] =
-      if (qlist == "all") SparkEntry.queries.keys.toSeq.sorted
-      else qlist.split(",").map(_.trim).toSeq
+    val catalog = SparkEntry.catalog
+    val specs =
+      if (qlist == "all") catalog.sortBy(_.name)
+      else qlist.split(",").map(_.trim).toSeq.map(n =>
+        catalog.find(_.name == n).getOrElse(sys.error(s"unknown query $n")))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    for (n <- names) {
-      val fn = SparkEntry.queries.getOrElse(n,
-        sys.error(s"unknown query $n"))
+    for (q <- specs; n = q.name) {
       try {
-        val plan = fn(spark, d).queryExecution.explainString(
+        val plan = q.build(spark, d).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$outDir/${n}_$tag.txt"),

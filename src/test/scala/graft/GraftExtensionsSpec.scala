@@ -12,6 +12,12 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(spark.sql("SELECT isqrt(16L)").collect()(0).getLong(0) === 4L)
   }
 
+  test("isqrt casts INT arguments up to BIGINT and passes NULL through") {
+    assert(spark.sql("SELECT isqrt(16)").collect()(0).getLong(0) === 4L)
+    assert(spark.sql("SELECT isqrt(CAST(NULL AS INT))").collect()(0)
+      .isNullAt(0))
+  }
+
   test("custom expressions are callable from SQL") {
     val r = spark.sql(
       """SELECT

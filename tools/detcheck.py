@@ -1,12 +1,14 @@
 #!/usr/bin/env python3
 """Run-to-run determinism check: load the same query's Spark output from
-two independent Verify runs (possibly different cpu counts) and diff the
-value multisets. Catches nondeterministic queries before the driver's
-hash compare does.
+two independent Verify runs (possibly different cpu counts or code
+versions) and diff the value multisets, then diff the two runs'
+`oracle_sql.json` byte for byte. Catches nondeterministic queries before
+the driver's hash compare does, and proves a catalog refactor left every
+result and every oracle text unchanged.
 
 Usage: python3 tools/detcheck.py <outDirA> <outDirB>
 """
-import os, sys
+import json, os, sys
 import duckdb
 
 
@@ -27,6 +29,23 @@ def rows(con, path):
         out.append(tuple(rr))
     out.sort(key=lambda t: tuple((x is None, str(x)) for x in t))
     return [cols[i] for i in idx], out
+
+
+def oracle_diffs(a, b):
+    """Names whose oracle SQL was added, removed or changed between runs."""
+    def load(root):
+        with open(os.path.join(root, "oracle_sql.json")) as fh:
+            return json.load(fh)
+    oa, ob = load(a), load(b)
+    out = []
+    for name in sorted(set(oa) | set(ob)):
+        if name not in oa:
+            out.append(f"FAIL {name}: oracle added in {b}")
+        elif name not in ob:
+            out.append(f"FAIL {name}: oracle removed in {b}")
+        elif oa[name] != ob[name]:
+            out.append(f"FAIL {name}: oracle text changed")
+    return len(set(oa) | set(ob)), out
 
 
 def main(a, b):
@@ -58,7 +77,11 @@ def main(a, b):
         else:
             n_pass += 1
     print(f"== determinism: {n_pass} identical / {n_fail} differ ==")
-    sys.exit(1 if n_fail else 0)
+    n_oracles, bad = oracle_diffs(a, b)
+    for line in bad:
+        print(line)
+    print(f"== oracles: {n_oracles - len(bad)} identical / {len(bad)} differ ==")
+    sys.exit(1 if n_fail or bad else 0)
 
 
 if __name__ == "__main__":
